@@ -51,12 +51,15 @@ def shingle_hashes(text: str, k: int = SHINGLE_K) -> np.ndarray:
     the codepoint array — for the default k=3 the fold expands to
     ``(c0*131^2 + c1*131 + c2) % P``, whose un-modded intermediate is
     <= 0x10FFFF * (131^2+131+1) < 2^35, so a single final ``% P`` yields
-    the identical residue the stepwise fold produced (same identity for
-    any k while ``max_cp * (131^k-1)/130`` fits int64; k <= 8 is safe).
-    Distinctness via ``np.unique`` (sorted — callers treat the array as a
-    set).  Hash values are bit-identical to the old fold; the DuckDB
-    oracles and the driver-side twins are unchanged.
+    the identical residue the stepwise fold produced.  The same identity
+    holds for any k while ``max_cp * (131^k-1)/130`` fits int64: k <= 7
+    (~2^62.3); at k = 8 it reaches ~2^69 and overflows, so larger k is
+    rejected.  Distinctness via ``np.unique`` (sorted — callers treat the
+    array as a set).  Hash values are bit-identical to the old fold; the
+    DuckDB oracles and the driver-side twins are unchanged.
     """
+    if k > 7:
+        raise ValueError(f"k={k}: the un-modded k-gram fold overflows int64 past k=7")
     cps = np.frombuffer(
         text.encode("utf-32-le", "surrogatepass"), dtype=np.uint32
     ).astype(np.int64)

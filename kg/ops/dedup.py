@@ -163,35 +163,6 @@ def _pow131(n: int) -> np.ndarray:
     return out
 
 
-def _word_shingle_hashes(text: str, k: int = 2) -> np.ndarray:
-    """Distinct word-k-gram polynomial hashes (mod 2^31-1), int64.
-
-    Vectorized (VERDICT r5 item 5) via hash composition: for the default
-    k=2 the fold of ``w1 + ' ' + w2`` satisfies
-        H(w1 ' ' w2) = (H(w1) * 131^(len(w2)+1)
-                        + 32 * 131^len(w2) + H(w2)) mod P
-    (32 = ord(' ')), so per-doc work is one NumPy expression over the
-    word-hash sequence instead of a Python char loop per gram.  All terms
-    stay below 2^63 (H < 2^31, powers < 2^31, so the sum < 2^62 + 2^36 +
-    2^31).  Hash VALUES are bit-identical to the old per-char fold — the
-    DuckDB oracle replay is unchanged; only distinct-set order differs
-    (np.unique sorts; callers treat the array as a set).
-    """
-    words = [w for w in text.split(" ") if w]
-    nw = len(words)
-    if nw < k:
-        return np.unique(
-            np.fromiter((_char_fold(w) for w in words), dtype=np.int64, count=nw)
-        )
-    assert k == 2, "compositional fast path implemented for k=2"
-    hs = np.fromiter((_char_fold(w) for w in words), dtype=np.int64, count=nw)
-    ls = np.fromiter((len(w) for w in words), dtype=np.int64, count=nw)
-    pw = _pow131(int(ls.max()) + 2)
-    l2 = ls[1:]
-    acc = (hs[:-1] * pw[l2 + 1]) % _P + 32 * pw[l2] + hs[1:]
-    return np.unique(acc % _P)
-
-
 def doc_shingle_buckets(
     docs: DataFrame, num_hashes: int = 32, bands: int = 8, seed: int = 11
 ) -> DataFrame:
@@ -209,8 +180,12 @@ def doc_shingle_buckets(
         from kg.cache import BoundedCache
 
         # per-word (fold hash, length) memo: the char fold runs once per
-        # DISTINCT word across the batch stream (Zipf mass hits the cache),
-        # gram hashes then compose vectorized (see _word_shingle_hashes)
+        # DISTINCT word across the batch stream (Zipf mass hits the cache).
+        # Word-bigram hashes then compose vectorized: the fold of
+        # ``w1 + ' ' + w2`` is
+        #   H(w1 ' ' w2) = (H(w1) * 131^(len(w2)+1) + 32 * 131^len(w2) + H(w2)) mod P
+        # (32 = ord(' ')), bit-identical to the per-char fold; every term
+        # stays below 2^63 (H < 2^31, powers < 2^31).
         wcache: dict[str, tuple[int, int]] = BoundedCache(262_144)
         pw = _pow131(64)
 

@@ -3,10 +3,12 @@
 Produces the input table mandated by BASELINE.json input_hint:
 ``(doc_id: string, spans: array<struct<kind, text, media_ref, offset:int>>)``
 (FIXTURES.md §1), seeded and fully deterministic.  Text payloads are tagged
-sentences in the reference corpus format sampled Zipf-skewed from
-/root/reference/data/test.txt (duplicate mentions across docs exercise
-entity linking; skewed surface forms exercise the salted LSH join); media
-spans interleave arbitrarily and must be carried through untouched.
+sentences in the reference corpus format sampled Zipf-skewed from the
+reference eval set (``REFERENCE_CORPUS``), or from a generated stand-in of
+the same shape when that file is absent (``generated_sentences``).
+Duplicate mentions across docs exercise entity linking; skewed surface
+forms exercise the salted LSH join; media spans interleave arbitrarily and
+must be carried through untouched.
 
 Each doc is generated from its own RNG seeded by (seed, doc index), so the
 corpus is order- and partitioning-independent: the driver-side and
@@ -20,6 +22,9 @@ and a >512-token sentence exercising truncation (ner/dataset.py:57,65-66,74-75).
 
 from __future__ import annotations
 
+import bisect
+import itertools
+import os
 import random
 
 from pyspark.sql import DataFrame, SparkSession
@@ -50,7 +55,79 @@ DOCS_SCHEMA = T.StructType(
 MEDIA_KINDS = ["image", "audio", "video"]
 
 
+# Segment-tag mix of the reference eval set (FIXTURES.md §2).
+TAG_MIX = {"o": 8786, "ns": 2877, "nr": 1973, "nt": 1331}
+# First lines of every generated corpus: they put the literal surfaces the
+# tests tokenize (中国致公党, 北京, 字, ...) into the vocabulary.
+ANCHOR_LINES = (
+    "中国致公党/nt 第十一次/o 全国/o 代表大会/o 在/o 北京/ns 开幕/o",
+    "中共中央/nt 的贺词/o 大会/o 上海/ns 人民解放军/nt 总政治部/nt",
+    "中华人民共和国国务院/nt 办公厅/o 北京市政府/nt 总参谋部/nt 主席团/o",
+    "同志们/o 热烈/o 祝贺/o 委员/o 之际/o 服务/o 字/o",
+)
+# The reference eval set's line count.
+GENERATED_LINES = 4365
+
+
+def generated_sentences() -> list[str]:
+    """Deterministic stand-in for the reference eval set, same format.
+
+    ``GENERATED_LINES`` whitespace-separated ``word/tag`` lines over CJK
+    words, with segment tags drawn in the ``TAG_MIX`` proportions.  Entity
+    mentions are drawn Zipf-skewed from a per-tag surface pool in which a
+    quarter of the surfaces of 4+ characters carry a one-character
+    near-duplicate variant (one character added or dropped), so that
+    linking has real merges.  The ``ANCHOR_LINES`` lines come first.
+    """
+    rng = random.Random(4244)
+    chars = sorted(
+        {c for line in ANCHOR_LINES for c in line if "\u4e00" <= c <= "\u9fff"}
+    ) + [chr(c) for c in range(0x5000, 0x5000 + 600)]
+
+    def word(lo: int, hi: int) -> str:
+        return "".join(rng.choice(chars) for _ in range(rng.randint(lo, hi)))
+
+    def zipf_cdf(k: int, s: float) -> list[float]:
+        acc = list(itertools.accumulate(1.0 / (r + 1) ** s for r in range(k)))
+        return [x / acc[-1] for x in acc]
+
+    def pick(pool: list, cdf: list[float]):
+        return pool[min(bisect.bisect_left(cdf, rng.random()), len(pool) - 1)]
+
+    entities: dict[str, list[list[str]]] = {}
+    for tag in ("ns", "nr", "nt"):
+        pool = []
+        for _ in range(300):
+            surface = word(2, 6)
+            forms = [surface]
+            if len(surface) >= 4 and rng.random() < 0.25:
+                forms.append(rng.choice([surface + rng.choice(chars), surface[:-1]]))
+            pool.append(forms)
+        entities[tag] = pool
+    entity_cdf = zipf_cdf(300, 1.1)
+    context = [word(1, 4) for _ in range(1500)]
+    context_cdf = zipf_cdf(len(context), 1.0)
+    tags, weights = zip(*TAG_MIX.items())
+
+    out = list(ANCHOR_LINES)
+    while len(out) < GENERATED_LINES:
+        segs = []
+        for tag in rng.choices(tags, weights, k=rng.randint(1, 6)):
+            if tag == "o":
+                segs.append(f"{pick(context, context_cdf)}/o")
+            else:
+                forms = pick(entities[tag], entity_cdf)
+                surface = forms[-1] if len(forms) > 1 and rng.random() < 0.3 else forms[0]
+                segs.append(f"{surface}/{tag}")
+        out.append(" ".join(segs))
+    return out
+
+
 def load_reference_sentences(path: str = REFERENCE_CORPUS) -> list[str]:
+    """Lines of the reference eval set; ``generated_sentences()`` when the
+    default reference file is absent."""
+    if path == REFERENCE_CORPUS and not os.path.exists(path):
+        return generated_sentences()
     with open(path, encoding="utf-8") as f:
         return [line.strip() for line in f if line.strip()]
 

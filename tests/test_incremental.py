@@ -17,32 +17,68 @@ def split_corpus():
     return docs[:100], docs[100:], docs
 
 
-def test_append_equals_fresh(spark, vocab, tmp_path, split_corpus):
+def test_append_equals_fresh(spark, vocab, tmp_path, split_corpus, at_both_widths):
     old, new, full = split_corpus
-    fresh = run_pipeline(
-        spark, docs_to_df(spark, full), str(tmp_path / "fresh"),
-        vocab=vocab, input_token="t150",
-    )
-    base = str(tmp_path / "inc")
+
+    def scenario(workers):
+        fresh = run_pipeline(
+            spark, docs_to_df(spark, full), str(tmp_path / f"fresh{workers}"),
+            vocab=vocab, input_token="t150",
+        )
+        base = str(tmp_path / f"inc{workers}")
+        run_pipeline(
+            spark, docs_to_df(spark, old), base, vocab=vocab, input_token="t100"
+        )
+        res = run_pipeline_append(
+            spark, docs_to_df(spark, new), base, vocab=vocab, input_token="b2"
+        )
+        for name in fresh.tables:
+            assert _rows(res.tables[name]) == _rows(fresh.tables[name]), name
+        # the per-document heavy stages were appended, never recomputed
+        for stage in ("documents", "extract", "mentions", "triples",
+                      "keyphrases", "documents_out"):
+            assert f"{stage}+append" in res.executed
+            assert stage not in res.executed
+        # recomputed tail: linked + nodes; edges took the INCREMENTAL path
+        # (r6) on this corpus — batch doc_ids are disjoint and no old
+        # mention's canonical changed, so only the canonicalized delta was
+        # appended
+        assert {"linked", "nodes"} <= set(res.executed)
+        assert "edges+append" in res.executed
+        assert "edges" not in res.executed
+        return fresh.executed, res.executed, {n: _rows(res.tables[n]) for n in res.tables}
+
+    at_both_widths(scenario)
+
+
+def test_append_batch_without_triples_equals_fresh(
+    spark, vocab, tmp_path, split_corpus
+):
+    """A batch of media-only and empty docs yields no mentions and no
+    triples.  Its edges increment has zero rows, and a partitioned write of
+    zero rows writes no file; the append must still commit every stage and
+    equal a fresh run over the union."""
+    old, _, _ = split_corpus
+    media = {"kind": "image", "text": "", "media_ref": "media://image/0", "offset": 0}
+    batch = [
+        {"doc_id": "doc-m0", "spans": [media]},
+        {"doc_id": "doc-m1", "spans": []},
+    ]
+    base = str(tmp_path / "media")
     run_pipeline(
         spark, docs_to_df(spark, old), base, vocab=vocab, input_token="t100"
     )
     res = run_pipeline_append(
-        spark, docs_to_df(spark, new), base, vocab=vocab, input_token="b2"
+        spark, docs_to_df(spark, batch), base, vocab=vocab, input_token="bm"
+    )
+    assert "edges+append" in res.executed
+    assert res.invariant_violations == 0
+    fresh = run_pipeline(
+        spark, docs_to_df(spark, old + batch), str(tmp_path / "media_f"),
+        vocab=vocab, input_token="tm",
     )
     for name in fresh.tables:
         assert _rows(res.tables[name]) == _rows(fresh.tables[name]), name
-    # the per-document heavy stages were appended, never recomputed
-    for stage in ("documents", "extract", "mentions", "triples",
-                  "keyphrases", "documents_out"):
-        assert f"{stage}+append" in res.executed
-        assert stage not in res.executed
-    # recomputed tail: linked + nodes; edges took the INCREMENTAL path (r6)
-    # on this corpus — batch doc_ids are disjoint and no old mention's
-    # canonical changed, so only the canonicalized delta was appended
-    assert {"linked", "nodes"} <= set(res.executed)
-    assert "edges+append" in res.executed
-    assert "edges" not in res.executed
 
 
 def test_append_is_idempotent(spark, vocab, tmp_path, split_corpus):

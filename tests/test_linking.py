@@ -20,6 +20,24 @@ def test_shingles_deterministic_and_short_strings():
     assert shingle_hashes("中").size == 1  # < k chars: whole string
 
 
+def test_shingle_hashes_k_bound_matches_stepwise_fold():
+    """The vectorized fold is exact up to k=7, where the un-modded sum over
+    the largest codepoints still fits int64; k=8 would overflow."""
+    from kg.config import MINHASH_PRIME as P
+
+    text = "\U0010ffff" * 8 + "中国致公党\U0010fffe"
+    k = 7
+    want = set()
+    for i in range(len(text) - k + 1):
+        h = 0
+        for ch in text[i : i + k]:
+            h = (h * 131 + ord(ch)) % P
+        want.add(h)
+    assert set(shingle_hashes(text, k=k).tolist()) == want
+    with pytest.raises(ValueError, match="k=8"):
+        shingle_hashes(text, k=8)
+
+
 def test_jaccard_bounds():
     assert jaccard("abcd", "abcd") == 1.0
     assert jaccard("abcd", "wxyz") == 0.0

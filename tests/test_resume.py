@@ -30,27 +30,34 @@ def _main_stages(executed):
     return [s for s in executed if not s.startswith("linked_cc")]
 
 
-def test_resume_skips_completed_and_recomputes_suffix(spark, vocab, tmp_path):
-    base = str(tmp_path / "run")
+def test_resume_skips_completed_and_recomputes_suffix(
+    spark, vocab, tmp_path, at_both_widths
+):
     docs = docs_to_df(spark, synth_docs(30))
 
-    res1 = run_pipeline(spark, docs, base, vocab=vocab)
-    assert _main_stages(res1.executed) == ALL_STAGES
-    golden = {n: _table_rows(res1.tables[n]) for n in ("mentions", "nodes", "edges")}
+    def scenario(workers):
+        base = str(tmp_path / f"run{workers}")
+        res1 = run_pipeline(spark, docs, base, vocab=vocab)
+        assert _main_stages(res1.executed) == ALL_STAGES
+        golden = {n: _table_rows(res1.tables[n]) for n in ("mentions", "nodes", "edges")}
 
-    # clean rerun: everything skipped, outputs identical
-    res2 = run_pipeline(spark, docs, base, vocab=vocab)
-    assert res2.executed == []
-    for n, rows in golden.items():
-        assert _table_rows(res2.tables[n]) == rows
+        # clean rerun: everything skipped, outputs identical
+        res2 = run_pipeline(spark, docs, base, vocab=vocab)
+        assert res2.executed == []
+        for n, rows in golden.items():
+            assert _table_rows(res2.tables[n]) == rows
 
-    # simulate a kill after 'mentions': wipe 'linked' and downstream manifests
-    for stage in ("linked", "nodes", "edges"):
-        shutil.rmtree(os.path.join(base, stage))
-    res3 = run_pipeline(spark, docs, base, vocab=vocab)
-    assert _main_stages(res3.executed) == ["linked", "nodes", "edges"]  # prefix untouched
-    for n, rows in golden.items():
-        assert _table_rows(res3.tables[n]) == rows
+        # simulate a kill after 'mentions': wipe 'linked' and downstream manifests
+        for stage in ("linked", "nodes", "edges"):
+            shutil.rmtree(os.path.join(base, stage))
+        res3 = run_pipeline(spark, docs, base, vocab=vocab)
+        assert _main_stages(res3.executed) == ["linked", "nodes", "edges"]  # prefix untouched
+        for n, rows in golden.items():
+            assert _table_rows(res3.tables[n]) == rows
+        executed = [res1.executed, res2.executed, res3.executed]
+        return executed, {n: _table_rows(res3.tables[n]) for n in ALL_STAGES}
+
+    at_both_widths(scenario)
 
 
 def test_input_change_invalidates_downstream(spark, vocab, tmp_path):
